@@ -11,8 +11,8 @@ reference's resource-governance surface:
   ``src/Interpreters/InterpreterCreateQuotaQuery.cpp``): windowed counters
   over queries / errors / result rows, raising ``QUOTA_EXPIRED``.
 * process list (``src/Interpreters/ProcessList.h``): every frontend
-  statement registers while it runs; ``KILL QUERY`` cancels its Spark job
-  group (the ``ProcessListEntry`` → ``CancellationCode`` path).
+  statement registers while it runs; ``KILL QUERY`` cancels its Spark jobs
+  by job tag (the ``ProcessListEntry`` → ``CancellationCode`` path).
 
 Scale notes: enforcement is plan-side or footer-metadata-side only —
 ``max_rows_to_read`` uses the same pre-execution parquet-footer estimate
@@ -75,6 +75,23 @@ _DEFAULTS = {
     "read_overflow_mode": "throw",
     "timeout_overflow_mode": "throw",
 }
+
+# Spark's local property behind SparkContext.setInterruptOnCancel
+_INTERRUPT_PROP = "spark.job.interruptOnCancel"
+
+
+def _tag_jobs(sc, tag: str):
+    """Tag this thread's Spark jobs with ``tag``, interruptible on cancel,
+    leaving its job group alone.  Returns the interrupt flag to restore."""
+    prev = sc.getLocalProperty(_INTERRUPT_PROP)
+    sc.addJobTag(tag)
+    sc.setInterruptOnCancel(True)
+    return prev
+
+
+def _untag_jobs(sc, tag: str, prev) -> None:
+    sc.removeJobTag(tag)
+    sc.setLocalProperty(_INTERRUPT_PROP, prev)
 
 
 class SessionLimits:
@@ -288,39 +305,38 @@ class SessionLimits:
 
     @staticmethod
     def apply_execution_timeout(spark, df, eff: dict):
-        """Materialize ``df`` under ``max_execution_time`` with job-group
+        """Materialize ``df`` under ``max_execution_time`` with job-tag
         cancellation (the ``ProcessList`` soft-cancel path).  Returns the
         persisted DataFrame on success; raises TIMEOUT_EXCEEDED on
         overrun.  Eager by construction — documented cost of the guard."""
         secs = eff.get("max_execution_time") or 0.0
         if not secs:
             return df
+        from pyspark import InheritableThread
+
         sc = spark.sparkContext
-        # reuse the statement's ProcessList query_id as the job group when
+        # reuse the statement's ProcessList query_id as the job tag when
         # one is active, so KILL QUERY reaches timeout-guarded jobs too
-        group = (process_list.current_qid()
-                 or f"max-exec-{id(df)}-{threading.get_ident()}")
+        tag = (process_list.current_qid()
+               or f"max-exec-{id(df)}-{threading.get_ident()}")
         persisted = df.persist()
         state: dict = {}
 
         def work() -> None:
+            # the worker inherits the caller's job group and tags
+            prev = _tag_jobs(sc, tag)
             try:
-                sc.setJobGroup(group, "max_execution_time guard",
-                               interruptOnCancel=True)
                 state["rows"] = persisted.count()
             except BaseException as exc:  # noqa: BLE001 — captured for re-raise
                 state["exc"] = exc
             finally:
-                try:
-                    sc.setJobGroup("", "")
-                except Exception:
-                    pass
+                _untag_jobs(sc, tag, prev)
 
-        t = threading.Thread(target=work, daemon=True)
+        t = InheritableThread(target=work, daemon=True)
         t.start()
         t.join(timeout=secs)
         if t.is_alive():
-            sc.cancelJobGroup(group)
+            sc.cancelJobsWithTag(tag)
             t.join(timeout=30)
             persisted.unpersist()
             if eff.get("timeout_overflow_mode") == "break":
@@ -469,15 +485,16 @@ class ProcessList:
 
     Each top-level ``ch_sql`` statement registers itself with a
     session-unique ``query_id``; the executing thread tags its Spark jobs
-    with that id as the job group so ``KILL QUERY`` maps to
-    ``cancelJobGroup`` — cancellation reaches the running stages of any
-    job launched while the statement is registered.
+    with that id (a job tag, not the job group: the caller's group stays
+    on every job) so ``KILL QUERY`` maps to ``cancelJobsWithTag`` —
+    cancellation reaches the running stages of any job launched while the
+    statement is registered.
 
     SCOPE (documented deviation from the reference): registration covers
     the statement's time INSIDE ``ch_sql`` — analysis, DDL, INSERT,
     OUTFILE, and any materialization the statement itself performs (e.g.
     result-row quota counting).  An ordinary SELECT returns a LAZY
-    DataFrame; its slot, job group and resource-group ticket are released
+    DataFrame; its slot, job tag and resource-group ticket are released
     when ``ch_sql`` returns, so a ``.collect()`` issued later by the
     caller runs outside ProcessList admission and outside KILL QUERY's
     reach.  The reference holds the entry until the client drains the
@@ -507,21 +524,22 @@ class ProcessList:
         }
         self._tls.qid = qid
         try:
-            spark.sparkContext.setJobGroup(
-                qid, sql.strip()[:200], interruptOnCancel=True
+            self._running[qid]["interrupt"] = _tag_jobs(
+                spark.sparkContext, qid
             )
         except Exception:
             pass
         return qid
 
     def unregister(self, spark, qid: str) -> None:
-        self._running.pop(qid, None)
+        info = self._running.pop(qid, None)
         if getattr(self._tls, "qid", None) == qid:
             self._tls.qid = None
-        try:
-            spark.sparkContext.setJobGroup("", "")
-        except Exception:
-            pass
+        if info is not None and "interrupt" in info:
+            try:
+                _untag_jobs(spark.sparkContext, qid, info["interrupt"])
+            except Exception:
+                pass
 
     def kill(self, spark, qid: str) -> str:
         """KILL QUERY WHERE query_id = ... — CancellationCode analogue."""
@@ -529,7 +547,7 @@ class ProcessList:
             return "NotFound"
         self._killed.add(qid)
         try:
-            spark.sparkContext.cancelJobGroup(qid)
+            spark.sparkContext.cancelJobsWithTag(qid)
         except Exception:
             return "CancelCannotBeSent"
         return "CancelSent"

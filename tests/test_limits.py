@@ -219,3 +219,28 @@ def test_rows_to_read_ignores_literals_and_columns(spark):
         "SETTINGS max_rows_to_read = 1000",
     ).collect()
     assert got[0][0] == "lineitem" and got[0][1] == 25
+
+
+def test_statement_keeps_the_callers_job_group(spark):
+    # ch_sql tags its jobs for KILL QUERY; the caller's job group stays on
+    # the statement's own jobs (the throw probe and the timeout guard's
+    # count) and on the caller's next job
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("caller-group", "caller")
+    try:
+        ch_sql(spark, "SELECT number FROM numbers(10) "
+                      "SETTINGS max_result_rows = 100")
+        n_probe = len(tracker.getJobIdsForGroup("caller-group"))
+        assert n_probe >= 1
+        ch_sql(spark, "SELECT number FROM numbers(10) "
+                      "SETTINGS max_execution_time = 60")
+        n_guard = len(tracker.getJobIdsForGroup("caller-group"))
+        assert n_guard > n_probe
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert not sc.getJobTags()
+        spark.range(3).count()
+        assert len(tracker.getJobIdsForGroup("caller-group")) > n_guard
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
