@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import functools
 import math
 
 from pyspark.sql import DataFrame, SparkSession
@@ -192,3 +193,47 @@ def local_df(spark: SparkSession, data, schema) -> DataFrame:
                 + f" AS t({cols})"
             )
     return spark.createDataFrame(data, schema)
+
+
+@functools.lru_cache(maxsize=1)
+def _rdd_scan_handles(jvm):
+    """The JVM objects ``one_partition`` calls, looked up once per JVM:
+    every step of a py4j class path is a round trip to the JVM."""
+    execution = jvm.org.apache.spark.sql.execution
+    return (
+        jvm.scala.Option.empty(),
+        getattr(getattr(execution, "LogicalRDD$"), "MODULE$"),
+        jvm.org.apache.spark.sql.classic.Dataset,
+    )
+
+
+def one_partition(df: DataFrame) -> DataFrame:
+    """``df`` as a scan of ONE partition that unions as its own partition.
+
+    A driver-parsed INSERT block is a LocalRelation, which Spark slices
+    ``spark.default.parallelism`` ways; a session table grown by such
+    blocks would scan as 32 tasks per block.  ``coalesce(1)`` alone does
+    not keep the blocks apart: it reports SinglePartition, and since
+    Spark 4.1 a union whose children all report the same partitioning
+    zips them into that many partitions, so every block of the table
+    would land in partition 0.  Instead the block becomes an RDD scan
+    over its own rows coalesced to one partition (no shuffle, no job),
+    built by ``LogicalRDD.fromDataset`` so it keeps the block's
+    statistics and reports unknown partitioning.  The block is planned
+    here, once, rather than by every read of the table.  Falls back to
+    ``coalesce(1)`` where those JVM entry points are missing."""
+    from py4j.protocol import Py4JError
+
+    spark = df.sparkSession
+    jdf = df._jdf
+    try:
+        no_coalescer, logical_rdd, dataset = _rdd_scan_handles(spark._jvm)
+        rdd = jdf.queryExecution().toRdd().coalesce(
+            1, False, no_coalescer, None
+        )
+        jds = dataset.ofRows(
+            spark._jsparkSession, logical_rdd.fromDataset(rdd, jdf, False)
+        )
+    except Py4JError:
+        return df.coalesce(1)
+    return DataFrame(jds, spark)

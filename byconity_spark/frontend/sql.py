@@ -28,6 +28,7 @@ ClickHouse.
 from __future__ import annotations
 
 from byconity_spark.engine.localdf import local_df as _local_df
+from byconity_spark.engine.localdf import one_partition as _one_partition
 
 from typing import Callable
 
@@ -6276,6 +6277,9 @@ RULES.update(
         ),
         "isInfinite": lambda a: f"(abs({a[0]}) = CAST('Infinity' AS DOUBLE))",
         "isNaN": lambda a: f"isnan({a[0]})",
+        # a session table's inserted block is one partition, so the
+        # block number of an unmerged part is the partition id
+        "blockNumber": lambda a: "CAST(spark_partition_id() AS BIGINT)",
         # 0-based global row number (CH debug helper) — single-partition
         # window by necessity, like the reference's sequential semantics;
         # don't use on big frames
@@ -12628,45 +12632,88 @@ _TABLE_PARTS_COUNT: dict = {}
 
 # Universal session-table parts ledger (reference StorageSystemCnchParts /
 # StorageSystemCnchPartsInfo over the CNCH part catalog): every INSERT
-# block is one part.  Entries hold the inserted block's LOGICAL PLAN and
-# count lazily — the row count is only materialized when a parts view is
-# actually queried (an INSERT never pays a Spark job for bookkeeping).
+# block is one part, and a driver-parsed block (VALUES, inline FORMAT) is
+# also one Spark partition of the table, so a scan costs one task per
+# part.  Entries hold the inserted block's LOGICAL PLAN and count lazily —
+# the row count is only materialized when a parts view is actually
+# queried.  An OPTIMIZE merge is recorded the same way: a pending entry
+# holding the table's plan and the parts it may merge, resolved in ledger
+# order when the parts are counted.  Neither an INSERT nor an OPTIMIZE
+# pays a Spark job for bookkeeping.
 # bytes_on_disk is the reference's in-memory estimate analogue
 # (rows × width × 8): deterministic, and identical between system.
 # cnch_parts and system.cnch_parts_info by construction.
 # Part types follow StorageSystemCnchParts.h: 1 = VisiblePart,
-# 2 = InvisiblePart, 3 = Tombstone (drop range), 4 = DroppedPart.
+# 2 = InvisiblePart, 3 = Tombstone (drop range), 4 = DroppedPart; a
+# pending merge that writes no part becomes 0 and leaves the ledger.
 # table -> [{"plan": df|None, "rows", "bytes", "t": datetime,
-#            "blk": (min, max, level), "type": int}]
+#            "blk": (min, max, level) | None while a merge is pending,
+#            "type": int, "merge_of": [entries], "uk": bool (the last
+#            two only while a merge is pending)}]
 _SESSION_PARTS: dict = {}
+
+
+def _next_block(led: list) -> int:
+    return max((p["blk"][1] for p in led if p["blk"]), default=-1) + 1
 
 
 def _parts_record_insert(name: str, new) -> None:
     import datetime as _dt
 
     led = _SESSION_PARTS.setdefault(name, [])
-    blk = max((p["blk"][1] for p in led), default=-1) + 1
+    blk = _next_block(led)
     led.append({
         "plan": new, "rows": None, "bytes": None,
         "t": _dt.datetime.now(), "blk": (blk, blk, 0), "type": 1,
     })
 
 
+def _parts_count(p: dict) -> None:
+    try:
+        p["rows"] = int(p["plan"].count())
+        p["bytes"] = p["rows"] * max(len(p["plan"].columns), 1) * 8
+    except Exception:
+        p["rows"], p["bytes"] = 0, 0
+    p["plan"] = None  # plan no longer needed once counted
+
+
+def _parts_resolve_merge(p: dict) -> None:
+    """Settle a pending OPTIMIZE merge over the parts it was recorded
+    against (all settled, being earlier in the ledger): fewer than two
+    visible parts on a table without UNIQUE KEY merge to nothing; else
+    they become DroppedPart rows and the merged part takes their block
+    range one level up, unless the table it snapshots is empty."""
+    vis = [q for q in p.pop("merge_of") if q["type"] == 1]
+    uk = p.pop("uk")
+    if len(vis) < 2 and not uk:
+        p["type"] = 0  # no merge happened
+        return
+    lo = min(q["blk"][0] for q in vis) if vis else 0
+    hi = max(q["blk"][1] for q in vis) if vis else 0
+    lvl = max(q["blk"][2] for q in vis) + 1 if vis else 1
+    for q in vis:
+        q["type"] = 4
+    _parts_count(p)
+    p["blk"] = (lo, hi, lvl)
+    if not p["rows"]:
+        p["type"] = 0  # an empty merge result writes no part
+
+
 def _parts_materialize(name: str) -> list:
-    """Count each pending part lazily (memoized); a block that turns out
-    empty never becomes a visible part (the reference skips empty
-    blocks).  Returns the live ledger entry list."""
+    """Count each pending part lazily (memoized), in ledger order; a
+    block that turns out empty never becomes a visible part (the
+    reference skips empty blocks).  Returns the live ledger entry list."""
     led = _SESSION_PARTS.get(name, [])
     for p in led:
-        if p["rows"] is None:
-            try:
-                p["rows"] = int(p["plan"].count())
-                p["bytes"] = p["rows"] * max(len(p["plan"].columns), 1) * 8
-            except Exception:
-                p["rows"], p["bytes"] = 0, 0
-            p["plan"] = None  # plan no longer needed once counted
-            if p["rows"] == 0 and p["type"] == 1:
-                p["type"] = 2  # empty block: never visible
+        if p["rows"] is not None:
+            continue
+        if "merge_of" in p:
+            _parts_resolve_merge(p)
+            continue
+        _parts_count(p)
+        if p["rows"] == 0 and p["type"] == 1:
+            p["type"] = 2  # empty block: never visible
+    led[:] = [p for p in led if p["type"]]
     return led
 
 
@@ -12688,7 +12735,7 @@ def _parts_drop_range(name: str) -> None:
     for p in led:
         if p["type"] == 1:
             p["type"] = 4
-    blk = max((p["blk"][1] for p in led), default=-1) + 1
+    blk = _next_block(led)
     led.append({
         "plan": None, "rows": 0, "bytes": 0,
         "t": _dt.datetime.now(), "blk": (blk, blk, 0), "type": 3,
@@ -12699,7 +12746,11 @@ def _parts_compact(spark, name: str) -> None:
     """OPTIMIZE merge: visible parts collapse to one merged part (old
     parts stay as DroppedPart catalog rows); a UNIQUE KEY table dedups
     its rows by the key at merge time (the reference's unique engine
-    resolves delete bitmaps when parts merge)."""
+    resolves delete bitmaps when parts merge).  The merge is recorded
+    lazily, like an INSERT: a pending ledger entry holds the table's
+    plan and the parts that may be visible now, and is settled by
+    ``_parts_resolve_merge`` only when the parts are counted, so
+    OPTIMIZE starts no Spark job."""
     import datetime as _dt
 
     uk = _SESSION_TABLE_KEYS.get(name, {}).get("unique_key")
@@ -12715,26 +12766,15 @@ def _parts_compact(spark, name: str) -> None:
     led = _SESSION_PARTS.get(name)
     if led is None:
         return
-    _parts_materialize(name)
-    vis = [p for p in led if p["type"] == 1]
-    if len(vis) < 2 and not uk:
-        return  # nothing to merge
     try:
-        t = spark.table(name)
-        n = int(t.count())
-        w = max(len(t.columns), 1)
+        plan = spark.table(name)
     except Exception:
-        n, w = 0, 1
-    lo = min(p["blk"][0] for p in vis) if vis else 0
-    hi = max(p["blk"][1] for p in vis) if vis else 0
-    lvl = max(p["blk"][2] for p in vis) + 1 if vis else 1
-    for p in vis:
-        p["type"] = 4
-    if n:
-        led.append({
-            "plan": None, "rows": n, "bytes": n * w * 8,
-            "t": _dt.datetime.now(), "blk": (lo, hi, lvl), "type": 1,
-        })
+        plan = None  # counts as an empty merge result
+    led.append({
+        "plan": plan, "rows": None, "bytes": None,
+        "t": _dt.datetime.now(), "blk": None, "type": 1,
+        "merge_of": [p for p in led if p["type"] == 1], "uk": bool(uk),
+    })
 
 
 def _check_and_count_parts(spark, name: str, new) -> None:
@@ -14756,7 +14796,10 @@ def _try_ddl(spark: SparkSession, sql: str):
             raise ChSqlError(
                 f"INSERT FORMAT: unknown column(s) {unknown} in {name!r}"
             )
-        new = _parse_inline_format(spark, fmt, payload, cols, target)
+        # one driver-parsed block = one part = one partition
+        new = _one_partition(
+            _parse_inline_format(spark, fmt, payload, cols, target)
+        )
         merged = _apply_insert_semantics(spark, name, new)
         merged.createOrReplaceTempView(name)
         from byconity_spark.engine.query_cache import query_cache
@@ -14851,6 +14894,11 @@ def _try_ddl(spark: SparkSession, sql: str):
         else:
             new = ch_sql(spark, kw + rest)
         new = _prepare_insert_block(spark, name, new, provided)
+        if kw.upper() == "VALUES":
+            # one driver-parsed block = one part = one partition (Spark
+            # would slice the local rows spark.default.parallelism ways);
+            # an INSERT ... SELECT block keeps its source partitioning
+            new = _one_partition(new)
         if (_SESSION_TABLE_ENGINES.get(name, "").lower() == "null"):
             # StorageNull: INSERT discards, SELECT stays empty
             return _local_df(spark, 
