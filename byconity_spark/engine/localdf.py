@@ -210,9 +210,9 @@ def _rdd_scan_handles(jvm):
 def one_partition(df: DataFrame) -> DataFrame:
     """``df`` as a scan of ONE partition that unions as its own partition.
 
-    A driver-parsed INSERT block is a LocalRelation, which Spark slices
-    ``spark.default.parallelism`` ways; a session table grown by such
-    blocks would scan as 32 tasks per block.  ``coalesce(1)`` alone does
+    A VALUES or inline FORMAT INSERT block is a LocalRelation, which
+    Spark slices ``spark.default.parallelism`` ways; a session table grown
+    by such blocks would scan as 32 tasks per block.  ``coalesce(1)`` alone does
     not keep the blocks apart: it reports SinglePartition, and since
     Spark 4.1 a union whose children all report the same partitioning
     zips them into that many partitions, so every block of the table

@@ -41,12 +41,12 @@ def get_spark(app_name: str = "byconity-spark", extra_conf: dict | None = None) 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.localShuffleReader.enabled", "true")
         # --- shuffle sizing: upper bound; AQE coalesces.  The floor of 32
-        # is 16x cores at local[2], not 2x: kept because the pandas/Arrow
-        # kernels size their buckets and scans from these two values, and
-        # lowering them moved those statements both ways (ann_ivf_topk
-        # +24 % at spark.default.parallelism=2 on local[2]).  Tiny inputs
-        # are kept from being sliced 32 ways where they are built (one
-        # partition per inserted session-table block, engine/localdf.py).
+        # is 16x the cores at local[2].  It is kept because the kernels'
+        # shuffles and scans are sized from these two values, and a
+        # one-run A/B at spark.default.parallelism=2 on local[2] moved
+        # them (ann_ivf_topk +24 %).  Tiny inputs avoid the 32-way slicing
+        # where they are built (engine/localdf.one_partition for inserted
+        # session-table blocks).
         .config("spark.sql.shuffle.partitions", str(max(32, cpus)))
         .config("spark.default.parallelism", str(max(32, cpus)))
         # --- scan-level pushdown (ByConity PushIntoTableScanRules.h analogue)

@@ -12632,9 +12632,9 @@ _TABLE_PARTS_COUNT: dict = {}
 
 # Universal session-table parts ledger (reference StorageSystemCnchParts /
 # StorageSystemCnchPartsInfo over the CNCH part catalog): every INSERT
-# block is one part, and a driver-parsed block (VALUES, inline FORMAT) is
-# also one Spark partition of the table, so a scan costs one task per
-# part.  Entries hold the inserted block's LOGICAL PLAN and count lazily —
+# block is one part, and a block parsed from the statement text (VALUES,
+# inline FORMAT) is also one Spark partition of the table, so a scan
+# costs one task per part.  Entries hold the inserted block's LOGICAL PLAN and count lazily —
 # the row count is only materialized when a parts view is actually
 # queried.  An OPTIMIZE merge is recorded the same way: a pending entry
 # holding the table's plan and the parts it may merge, resolved in ledger
@@ -14796,7 +14796,7 @@ def _try_ddl(spark: SparkSession, sql: str):
             raise ChSqlError(
                 f"INSERT FORMAT: unknown column(s) {unknown} in {name!r}"
             )
-        # one driver-parsed block = one part = one partition
+        # one inline block = one part = one partition
         new = _one_partition(
             _parse_inline_format(spark, fmt, payload, cols, target)
         )
@@ -14895,7 +14895,7 @@ def _try_ddl(spark: SparkSession, sql: str):
             new = ch_sql(spark, kw + rest)
         new = _prepare_insert_block(spark, name, new, provided)
         if kw.upper() == "VALUES":
-            # one driver-parsed block = one part = one partition (Spark
+            # one VALUES block = one part = one partition (Spark
             # would slice the local rows spark.default.parallelism ways);
             # an INSERT ... SELECT block keeps its source partitioning
             new = _one_partition(new)
