@@ -220,20 +220,12 @@ def one_partition(df: DataFrame) -> DataFrame:
     over its own rows coalesced to one partition (no shuffle, no job),
     built by ``LogicalRDD.fromDataset`` so it keeps the block's
     statistics and reports unknown partitioning.  The block is planned
-    here, once, rather than by every read of the table.  Falls back to
-    ``coalesce(1)`` where those JVM entry points are missing."""
-    from py4j.protocol import Py4JError
-
+    here, once, rather than by every read of the table."""
     spark = df.sparkSession
     jdf = df._jdf
-    try:
-        no_coalescer, logical_rdd, dataset = _rdd_scan_handles(spark._jvm)
-        rdd = jdf.queryExecution().toRdd().coalesce(
-            1, False, no_coalescer, None
-        )
-        jds = dataset.ofRows(
-            spark._jsparkSession, logical_rdd.fromDataset(rdd, jdf, False)
-        )
-    except Py4JError:
-        return df.coalesce(1)
+    no_coalescer, logical_rdd, dataset = _rdd_scan_handles(spark._jvm)
+    rdd = jdf.queryExecution().toRdd().coalesce(1, False, no_coalescer, None)
+    jds = dataset.ofRows(
+        spark._jsparkSession, logical_rdd.fromDataset(rdd, jdf, False)
+    )
     return DataFrame(jds, spark)

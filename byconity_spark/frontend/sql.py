@@ -13712,7 +13712,8 @@ def _try_ddl(spark: SparkSession, sql: str):
         )
 
     # KILL QUERY WHERE query_id = 'qN' (InterpreterKillQueryQuery.cpp) —
-    # maps to cancelJobGroup on the target statement's job group
+    # maps to cancelJobsWithTag on the target statement's job tag (its
+    # query id)
     m = re.match(
         r"KILL\s+QUERY\s+WHERE\s+query_id\s*=\s*'([^']+)'$", s, re.IGNORECASE
     )

@@ -67,6 +67,13 @@ def test_values_block_is_one_partition_and_select_keeps_its_own(spark):
         ch_sql(spark, f"INSERT INTO sp_t VALUES {_values(block)}")
     assert _block_sizes(spark, "sp_t") == sizes
 
+    csv = [(nxt + j, float(j) + 0.25) for j in range(4)]
+    model.update(csv)
+    ch_sql(spark, "INSERT INTO sp_t FORMAT CSV "
+                  + "\n".join(f"{i},{v}" for i, v in csv))
+    sizes.append(len(csv))
+    assert _block_sizes(spark, "sp_t") == sizes
+
     src = "SELECT number + 100 AS id, toFloat64(number) AS v FROM numbers(40)"
     src_parts = ch_sql(spark, src).rdd.getNumPartitions()
     ch_sql(spark, f"INSERT INTO sp_t {src}")
