@@ -2,18 +2,19 @@
 """Interleaved A/B of the perfbench ``ingest`` script on two checkouts.
 
     python .dev/ab_session_parts.py A_DIR B_DIR [--rounds 3] [--passes 2]
-                                    [--seed 41] [--warm-tasks 0]
+                                    [--seed 41] [--warm-tasks 3000]
 
 Each round starts one fresh Spark session per checkout, in A-B order on
 even rounds and B-A order on odd ones, so both sides share the same host
 window.  A session runs the checkout's own ``perfbench`` set-up (same host
 pinning and Spark configuration as ``perfbench/run.py``), one short warm
-pass, ``--warm-tasks`` trivial Spark tasks (jobs of 100 one-task-per-slice
-range aggregates, the same on both sides), then ``--passes`` timed passes
+pass, ``--warm-tasks`` trivial Spark tasks (range aggregates of 100
+partitions each, the same on both sides), then ``--passes`` timed passes
 of the ingest script.  The extra warm-up evens out how warm each side's
-JIT is when timing starts, for a change that runs fewer tasks per pass.  Every statement
-runs under its own job group, and its jobs and tasks are read from Spark's
-status store after the passes.  Read-backs are checked against the
+JIT is when timing starts, for a change that runs fewer tasks per pass;
+``--warm-tasks 0`` times the statements as ``perfbench/run.py`` does.
+Every statement runs under its own job group, and its jobs and tasks are
+read from Spark's status store after the passes.  Read-backs are checked against the
 script's Python model; a mismatch is printed and fails the run.
 
 Prints, per statement, the median wall time of each side, B's change
@@ -111,7 +112,7 @@ def main() -> int:
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--seed", type=int, default=41)
-    ap.add_argument("--warm-tasks", type=int, default=0)
+    ap.add_argument("--warm-tasks", type=int, default=3000)
     ap.add_argument("--round", type=int, default=0, help=argparse.SUPPRESS)
     ap.add_argument("--child", help=argparse.SUPPRESS)
     args = ap.parse_args()
